@@ -266,8 +266,8 @@ object SparkEntry {
       .select(col("doc_id"), col("text").as("extracted_text"), col("doc_id").as("url"))
     // localCheckpoint (eager, per-invocation — NOT a cross-query cache: each
     // call recomputes from parquet and the blocks are context-cleaned when
-    // the result is dropped): the sigs frame feeds the band explode, the
-    // hot-bucket count and both verify join sides, and without truncation
+    // the result is dropped): the sigs frame feeds the band explode and
+    // both verify join sides, and without truncation
     // the full doc_signature sketch re-runs once per consumer (6 evaluations
     // in the q18 baseline plan — guide §2.4, duplicated subtrees).
     MinHashLsh.signatures(docs, cfg).withColumn("node", col("doc_id"))
@@ -301,11 +301,9 @@ object SparkEntry {
     val corpus = d.select(col("doc_id"), col("text"))
       .unionByName(d.select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
       .select(col("doc_id"), col("text").as("extracted_text"), col("doc_id").as("url"))
-    // eager per-invocation checkpoint: the block explode and hot-key count
-    // would otherwise re-run the doc_signature sketch per consumer (docSigs
-    // rationale)
+    // no checkpoint (unlike docSigs): the block explode is the sigs frame's
+    // only consumer, so the doc_signature sketch runs once either way
     val sigs = MinHashLsh.signatures(corpus, cfg).withColumn("node", col("doc_id"))
-      .localCheckpoint(true)
     // uncapped: this gate proves SimHash pigeonhole SEMANTICS (every
     // planted identical pair surfaces — the closed-form oracle), so the
     // hot-bucket cap policy must not intersect it; a boilerplate-heavy

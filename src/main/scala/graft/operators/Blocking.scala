@@ -50,8 +50,10 @@ object Blocking {
 
   /** B4 candidate pairs from blocking keys (candidate_pairs.py:31-64):
     * explode keys → self-join → canonical order → dedup across blocks.
-    * Same join machinery as the LSH band join (MinHashLsh.lshCandidates);
-    * `maxBucketSize` caps degenerate blocks.
+    * Blocking keys are strings, so this join does not share the long-keyed
+    * streaming kernel of the LSH band join (MinHashLsh.bucketPairs): blocks
+    * above `maxBucketSize` rows are counted with a `groupBy(key)` and
+    * removed by a broadcast anti-join before the self-join.
     *
     * @param events DataFrame with (id, blocking_keys array<string>)
     */

@@ -14,14 +14,17 @@ import graft.functions.Hashing
   * exact shingle Jaccard (the reference's scorer role, `matching/pipeline.py:123-153`).
   *
   * Scale posture:
-  *  - the band self-join is THE skew-sensitive shuffle; over-dense buckets
-  *    (boilerplate pages, hot hosts) are capped at `cfg.lsh.maxBucketSize`
-  *    via a broadcast anti-join of hot keys (dropped buckets are observable
-  *    in [[bucketStats]], never silent) — pair blowup is quadratic in bucket
+  *  - the band self-join is THE skew-sensitive shuffle. Every bucket join
+  *    runs through [[bucketPairs]]: one shuffle by key, a sort by
+  *    (key, node), and a streaming pass that learns each bucket's size
+  *    where the data lands — no driver-side pre-pass, no Spark job while the
+  *    plan is built. Over-dense buckets (boilerplate pages, hot hosts) above
+  *    `cfg.lsh.maxBucketSize` are starred or dropped in that same pass with
+  *    O(cap) memory per task (capped buckets are observable in
+  *    [[bucketStats]], never silent) — pair blowup is quadratic in bucket
   *    size, so one 10^6 bucket would otherwise emit 10^12 pairs;
-  *  - AQE skew-join handles residual imbalance below the cap;
-  *  - pair canonical ordering `node_a < node_b` halves the join output and
-  *    `dropDuplicates` dedups across bands (candidate_pairs.py:59-64 semantics).
+  *  - pair canonical ordering `node_a < node_b` halves the pair output and
+  *    a dedup across buckets follows (candidate_pairs.py:59-64 semantics).
   */
 object MinHashLsh {
 
@@ -69,94 +72,88 @@ object MinHashLsh {
         sum(when(col("count") > 1, col("count") * (col("count") - 1) / 2).otherwise(0)).as("candidate_pairs_upper")
       )
 
-  /** Exact set of hot keys (bucket size > cap) computed WITHOUT the
-    * corpus-wide (key, count) aggregation shuffle the naive
-    * `groupBy(key).count()` pays (guide §2.4 — that exchange carries one row
-    * per DISTINCT key, i.e. nearly the full exploded frame when band keys are
-    * mostly unique, and in the self-join callers the whole count subtree was
-    * even duplicated once per join side).
+  /** The one bucket self-join behind every blocking join here: the fused
+    * band/block join, [[lshCandidates]], [[simHashCandidates]],
+    * [[graft.operators.Similarity.nearDupPairs]] and
+    * [[graft.operators.SuffixOverlap.candidates]].
     *
-    * Pass 1 (shuffle-free): count keys per partition and keep only keys that
-    * clear the pigeonhole bound — a key with total count > cap spread over m
-    * partitions must reach a local count ≥ ceil((cap+1)/m) in at least one
-    * partition, so the survivor set is a superset of the true hot set. On
-    * non-pathological corpora it is empty and detection costs one narrow
-    * local pass over cached bytes. Per-task state is one (key → count) map
-    * over the partition's distinct keys — bounded by partition row count,
-    * the same order of memory the old hash aggregation used.
-    *
-    * Pass 2 (only when pass 1 finds survivors): exact-count just the
-    * survivor keys behind a broadcast semi-join and apply the true `> cap`
-    * filter — the aggregation output is |survivors|, not |distinct keys|.
+    * Input rows are `(key, node, aux, tier)`: `key` names the bucket, `node`
+    * the member, `aux` the member's SimHash (read for tier 1 only) and `tier`
+    * the key space. They are shuffled ONCE by key, sorted within partitions
+    * by `(key, node)`, and each bucket is streamed with a buffer of at most
+    * `cap + 1` rows:
+    *  - a bucket that ends with ≤ `cap` rows emits every pair
+    *    `node_a < node_b` of one tier (tier 1 also needs Hamming distance
+    *    `bit_count(aux_a ^ aux_b) ≤ maxHamming`);
+    *  - a bucket that reaches `cap + 1` rows is hot: with `star` it emits
+    *    `(min node, node)` at tier 2 for every larger distinct node (O(m)
+    *    pairs, no Hamming filter), otherwise nothing.
+    * Hot means the ROW count exceeds `cap`, so duplicate (key, node) rows
+    * count; equal nodes never pair; rows with a null key or node are
+    * dropped. `cap == Int.MaxValue` never drops. Output
+    * `(node_a, node_b, tier)` is not deduped across buckets.
     */
-  private[operators] def hotKeyArray(rows: DataFrame, keyCol: String, cap: Int): Array[Long] = {
-    val keys = rows.select(col(keyCol))
-    require(keys.schema.head.dataType == org.apache.spark.sql.types.LongType,
-      s"hot-key detection expects a LongType key, got ${keys.schema.head.dataType}")
-    val rdd = keys.queryExecution.toRdd // InternalRow: no Row conversion
-    val m = math.max(1, rdd.getNumPartitions)
-    val thr = (cap.toLong + m) / m // ceil((cap+1)/m)
-    val survivors = rdd.mapPartitions { it =>
-      val counts = new java.util.HashMap[Long, Long]()
-      while (it.hasNext) {
-        val k = it.next().getLong(0)
-        counts.put(k, counts.getOrDefault(k, 0L) + 1L)
-      }
-      import scala.jdk.CollectionConverters._
-      counts.entrySet().iterator().asScala
-        .filter(_.getValue >= thr).map(_.getKey.longValue())
-    }.collect().distinct
-    if (survivors.isEmpty) Array.empty[Long]
-    else {
-      val spark = rows.sparkSession
-      import spark.implicits._
-      keys.join(broadcast(survivors.toSeq.toDF(keyCol)), Seq(keyCol), "left_semi")
-        .groupBy(keyCol).count()
-        .where(col("count") > cap)
-        .select(keyCol).collect().map(_.getLong(0))
-    }
+  private[operators] def bucketPairs(rows: DataFrame, cap: Int, maxHamming: Int,
+      star: Boolean): DataFrame = {
+    require(cap >= 1, s"maxBucketSize must be >= 1, got $cap")
+    val spark = rows.sparkSession
+    import spark.implicits._
+    rows.where(col("key").isNotNull && col("node").isNotNull)
+      .select("key", "node", "aux", "tier")
+      .repartition(col("key"))
+      .sortWithinPartitions("key", "node")
+      .as[(Long, Long, Long, Byte)]
+      .mapPartitions(streamBuckets(_, cap, maxHamming, star))
+      .toDF("node_a", "node_b", "tier")
   }
 
-  /** Drop every row whose `keyCol` bucket holds more than `cap` members —
-    * the hot-bucket guard shared by the band join, the SimHash block join
-    * and the embedding-LSH bucket join ([[graft.operators.Similarity
-    * .nearDupPairs]]). Hot keys are few by construction (each one holds
-    * > cap rows), so they broadcast. `cap == Int.MaxValue` skips the prune
-    * entirely (exhaustive semantics, no counting shuffle); `cap < 1` would
-    * silently drop every non-empty bucket, so it's rejected.
-    *
-    * r6: the hot set is detected eagerly via [[hotKeyArray]] (pigeonhole
-    * local count, no corpus-wide count shuffle) and the anti-join is elided
-    * outright when it is empty — the previous lazy `groupBy(key).count()`
-    * subtree was planned once per self-join SIDE in every caller (two
-    * Exchange + HashAggregate pairs per query, visible in the q18/q19
-    * baseline plans).
-    */
-  private[operators] def pruneHotBuckets(rows: DataFrame, keyCol: String, cap: Int): DataFrame =
-    if (cap == Int.MaxValue) rows
-    else {
-      require(cap >= 1, s"maxBucketSize must be >= 1, got $cap")
-      val hot = hotKeyArray(rows, keyCol, cap)
-      if (hot.isEmpty) rows
-      else {
-        val spark = rows.sparkSession
-        import spark.implicits._
-        // NOTE: the Seq-key anti-join moves keyCol first in the output —
-        // callers must select columns by NAME afterwards, never by position
-        rows.join(broadcast(hot.toSeq.toDF(keyCol)), Seq(keyCol), "left_anti")
+  private def streamBuckets(sorted: Iterator[(Long, Long, Long, Byte)], cap: Int,
+      maxHamming: Int, star: Boolean): Iterator[(Long, Long, Byte)] = {
+    val in = sorted.buffered
+    val buckets = new Iterator[Iterator[(Long, Long, Byte)]] {
+      def hasNext: Boolean = in.hasNext
+      def next(): Iterator[(Long, Long, Byte)] = {
+        val key = in.head._1
+        val rest = new Iterator[(Long, Long, Long, Byte)] {
+          def hasNext: Boolean = in.hasNext && in.head._1 == key
+          def next(): (Long, Long, Long, Byte) = in.next()
+        }
+        val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Byte)]
+        while (buf.length <= cap && rest.hasNext) buf += rest.next()
+        if (buf.length <= cap) {
+          val n = buf.length
+          Iterator.range(0, n).flatMap { i =>
+            val (_, na, xa, ta) = buf(i)
+            Iterator.range(i + 1, n).map(buf(_)).collect {
+              case (_, nb, xb, tb) if na < nb && ta == tb &&
+                  (ta != 1 || java.lang.Long.bitCount(xa ^ xb) <= maxHamming) => (na, nb, ta)
+            }
+          }
+        } else if (star) {
+          // sorted by node: the first row holds the minimum, and a strictly
+          // increasing filter also skips duplicate member rows
+          var prev = buf.head._2
+          val hub = prev
+          (buf.iterator ++ rest).collect {
+            case (_, nb, _, _) if nb > prev => prev = nb; (hub, nb, 2.toByte)
+          }
+        } else {
+          rest.foreach(_ => ())
+          Iterator.empty
+        }
       }
     }
+    buckets.flatten
+  }
 
   /** LSH candidate pairs: (node_a, node_b) with node_a < node_b, deduped
     * across bands, hot buckets dropped (observable via [[bucketStats]]).
     */
   def lshCandidates(sigs: DataFrame, cfg: GraftConfig): DataFrame = {
-    val b = bands(sigs, cfg)
-    val pruned = pruneHotBuckets(b, "band_key", cfg.lsh.maxBucketSize)
-    val a = pruned.alias("a")
-    val bb = pruned.alias("b")
-    a.join(bb, col("a.band_key") === col("b.band_key") && col("a.node") < col("b.node"))
-      .select(col("a.node").as("node_a"), col("b.node").as("node_b"))
+    val keyed = bands(sigs, cfg)
+      .select(col("band_key").as("key"), col("node"), lit(0L).as("aux"), lit(0).cast("tinyint").as("tier"))
+    bucketPairs(keyed, cfg.lsh.maxBucketSize, 0, star = false)
+      .select("node_a", "node_b")
       .dropDuplicates("node_a", "node_b")
   }
 
@@ -167,46 +164,34 @@ object MinHashLsh {
     */
   def simHashCandidates(sigs: DataFrame, cfg: GraftConfig): DataFrame = {
     val d = cfg.simhash.maxHammingDistance
-    val blocks = sigs.where(col("simhash").isNotNull)
-      .select(col("node"), col("simhash"), explode(Hashing.simHashBlocks(col("simhash"), d + 1)).as("block_key"))
-    val pruned = pruneHotBuckets(blocks, "block_key", cfg.lsh.maxBucketSize)
-    val a = pruned.alias("a")
-    val b = pruned.alias("b")
-    a.join(b, col("a.block_key") === col("b.block_key") && col("a.node") < col("b.node"))
-      .where(bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))) <= d)
-      .select(col("a.node").as("node_a"), col("b.node").as("node_b"))
+    val keyed = sigs.where(col("simhash").isNotNull)
+      .select(explode(Hashing.simHashBlocks(col("simhash"), d + 1)).as("key"), col("node"),
+        col("simhash").as("aux"), lit(1).cast("tinyint").as("tier"))
+    bucketPairs(keyed, cfg.lsh.maxBucketSize, d, star = false)
+      .select("node_a", "node_b")
       .dropDuplicates("node_a", "node_b")
   }
 
   /** Fused candidate generation: MinHash band keys AND SimHash block keys in
-    * ONE exploded frame → one hot-key pass → one self-join → one dedup.
-    * Same output as union(lshCandidates, simHashCandidates) with tier =
-    * lexical min ('lsh' < 'simhash'), at roughly half the shuffles — on a
-    * real cluster the band self-join is the dominant shuffle, so halving its
-    * count matters more than any per-row cost.
+    * ONE exploded frame → one [[bucketPairs]] pass → one dedup. Same output
+    * as union(lshCandidates, simHashCandidates) with tier = lexical min
+    * ('lsh' < 'simhash'), except that hot buckets star instead of dropping.
+    * On a real cluster the band self-join is the dominant shuffle, so
+    * running both key families through one shuffle matters more than any
+    * per-row cost.
     *
     * **Mega-bucket handling** (skew, north_rule): a bucket of m members
     * emits m(m-1)/2 pairs — one 10^6-member boilerplate bucket would emit
     * 5·10^11 pairs and kill the job. Buckets above `cfg.lsh.maxBucketSize`
-    * switch to STAR candidates: every member pairs with the bucket minimum
-    * (O(m) pairs). For the dominant mega-bucket cause — identical/near-
-    * identical boilerplate — verification accepts the star edges and
-    * connected components restores the full cluster transitively; genuinely
-    * heterogeneous mega-buckets degrade recall gracefully instead of
-    * exploding. Counts are observable via [[bucketStats]].
+    * switch to STAR candidates where they land: every member pairs with the
+    * bucket minimum (O(m) pairs, O(cap) memory per task). For the dominant
+    * mega-bucket cause — identical/near-identical boilerplate — verification
+    * accepts the star edges and connected components restores the full
+    * cluster transitively; genuinely heterogeneous mega-buckets degrade
+    * recall gracefully instead of exploding. Counts are observable via
+    * [[bucketStats]].
     */
-  /** @param materialize optional persistence hook for the exploded key
-    *   frame (consumed by the hot-key agg, both self-join sides, and the
-    *   star branch when hot buckets exist). The pipeline deliberately passes
-    *   identity: re-deriving the explode from the column-pruned signatures
-    *   cache costs fewer memory BYTES than caching the exploded form
-    *   (~150 B/doc × 3 reads vs ~800 B/doc write + 3 reads), and memory
-    *   bandwidth — not CPU — is the observed scaling ceiling (BENCH.md).
-    *   Callers whose upstream is not persisted (ad-hoc use on a raw scan)
-    *   should still pass a cache here.
-    */
-  def fusedCandidates(sigs: DataFrame, cfg: GraftConfig,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+  def fusedCandidates(sigs: DataFrame, cfg: GraftConfig): DataFrame = {
     val d = cfg.simhash.maxHammingDistance
     // Accept either a precomputed `band_keys` column (the pipeline persists
     // those 16 longs instead of the 128-long minhash — 8x fewer cached
@@ -218,58 +203,21 @@ object MinHashLsh {
     // tier travels as one byte until the final projection: the exploded key
     // frame is the widest shuffle of the pipeline, and a 3-16 char UTF8
     // string per row is pure overhead there ('0' lsh < '1' simhash < '2'
-    // star keeps the same min-wins dedup priority).
+    // star keeps the same min-wins dedup priority). Band rows never read
+    // their SimHash, so they carry a constant aux.
     val banded = sigs.withColumn("bk", bandKeysCol).where(col("bk").isNotNull)
-      .select(col("node"), col("simhash"), explode(col("bk")).as("key"))
-      .withColumn("tier", lit(0).cast("tinyint"))
+      .select(explode(col("bk")).as("key"), col("node"), lit(0L).as("aux"),
+        lit(0).cast("tinyint").as("tier"))
     val blocked = sigs.where(col("simhash").isNotNull)
       .select(col("node"), col("simhash"),
         // salt block keys into a disjoint key space from band keys
         explode(Hashing.simHashBlocks(col("simhash"), d + 1)).as("raw_key"))
-      .select(col("node"), col("simhash"), xxhash64(col("raw_key"), lit("simblock")).as("key"))
-      .withColumn("tier", lit(1).cast("tinyint"))
-    val keyed = materialize(banded.unionByName(blocked))
-    // The hot-key SET is tiny by construction (keys whose bucket exceeds the
-    // cap) — collect it once: the broadcast build would pull it to the
-    // driver anyway, and knowing it's empty lets the whole anti-join + star
-    // subplan tree be elided from the plan (it usually is on clean corpora;
-    // boilerplate-heavy web crawls are where it kicks in). r6: detection
-    // goes through [[hotKeyArray]]'s pigeonhole local count — the previous
-    // `groupBy(key).count()` shuffled one row per DISTINCT key (≈ the whole
-    // 20-keys/doc exploded frame, its second-largest exchange after the
-    // self-join itself) just to find a set that is almost always empty.
-    val spark = sigs.sparkSession
-    val hotArr = hotKeyArray(keyed, "key", cfg.lsh.maxBucketSize)
-    import spark.implicits._
-    val hotKeys = broadcast(hotArr.toSeq.toDF("key"))
+      .select(xxhash64(col("raw_key"), lit("simblock")).as("key"), col("node"),
+        col("simhash").as("aux"), lit(1).cast("tinyint").as("tier"))
 
-    // normal buckets: all-pairs within bucket
-    val pruned =
-      if (hotArr.isEmpty) keyed else keyed.join(hotKeys, Seq("key"), "left_anti")
-    val a = pruned.alias("a")
-    val b = pruned.alias("b")
-    val allPairs = a.join(b, col("a.key") === col("b.key") && col("a.node") < col("b.node"))
-      .where(col("a.tier") === col("b.tier")) // a pair matches within one tier's key space
-      .where(col("a.tier") === 0 ||
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))) <= d)
-      .select(col("a.node").as("node_a"), col("b.node").as("node_b"), col("a.tier").as("cand_tier"))
-
-    val withStar =
-      if (hotArr.isEmpty) allPairs
-      else {
-        // hot buckets: star to the bucket minimum (skew-safe linear fan-out)
-        val hot = keyed.join(hotKeys, Seq("key"), "left_semi")
-        val hotMin = hot.groupBy("key").agg(min(col("node")).as("min_node"))
-        val starPairs = hot.join(hotMin, "key")
-          .where(col("node") > col("min_node"))
-          .select(col("min_node").as("node_a"), col("node").as("node_b"),
-            lit(2).cast("tinyint").as("cand_tier"))
-        allPairs.unionByName(starPairs)
-      }
-
-    withStar
+    bucketPairs(banded.unionByName(blocked), cfg.lsh.maxBucketSize, d, star = true)
       .groupBy("node_a", "node_b")
-      .agg(min(col("cand_tier")).as("t")) // 0 lsh < 1 simhash < 2 star
+      .agg(min(col("tier")).as("t")) // 0 lsh < 1 simhash < 2 star
       .select(col("node_a"), col("node_b"),
         when(col("t") === 0, "lsh").when(col("t") === 1, "simhash")
           .otherwise("star").as("cand_tier"))

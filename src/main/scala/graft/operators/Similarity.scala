@@ -214,13 +214,15 @@ object Similarity {
   }
 
   /** Embedding-cosine near-duplicate pairs: bucket join + exact cosine ≥
-    * threshold, canonical pair order. Hot buckets (> maxBucketSize members
-    * — mass-duplicated vectors landing one bucket in every table) are
-    * dropped via the same broadcast anti-join as the MinHash band join
-    * (`MinHashLsh.lshCandidates`): without the cap a corpus of ~1M
-    * identical pages enumerates ~tables·N² join rows. Pass
-    * `maxBucketSize = Int.MaxValue` for provably-exhaustive semantics
-    * (the degenerate single-bucket oracle configs do).
+    * threshold, canonical pair order. The bucket join is
+    * [[MinHashLsh.bucketPairs]], the same streaming kernel as the MinHash
+    * band join: hot buckets (> maxBucketSize rows — mass-duplicated vectors
+    * landing one bucket in every table) are dropped where they land, since
+    * without the cap a corpus of ~1M identical pages enumerates
+    * ~tables·N² pairs. Only ids cross the bucket shuffle; the vectors join
+    * back onto the deduped pairs. Pass `maxBucketSize = Int.MaxValue` for
+    * provably-exhaustive semantics (the degenerate single-bucket oracle
+    * configs do).
     */
   def nearDupPairs(
       corpus: DataFrame, threshold: Double,
@@ -228,16 +230,14 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       maxBucketSize: Int = 2000
   ): DataFrame = {
-    val b = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"),
-      explode(lshBuckets(col(vecCol), tables, bitsPerTable, seed)).as("bucket"))
-    val pruned = MinHashLsh.pruneHotBuckets(b, "bucket", maxBucketSize)
-    // rename BY NAME: the Seq-key anti-join reorders columns (bucket first),
-    // so a positional toDF would silently misassign them
-    val a = pruned.select(col("id").as("id_a"), col("vec").as("vec_a"), col("bucket"))
-    val c = pruned.select(col("id").as("id_b"), col("vec").as("vec_b"), col("bucket"))
-    a.join(c, Seq("bucket"))
-      .where(col("id_a") < col("id_b"))
+    val vecs = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
+    val keyed = vecs.select(explode(lshBuckets(col("vec"), tables, bitsPerTable, seed)).as("key"),
+      col("id").as("node"), lit(0L).as("aux"), lit(0).cast("tinyint").as("tier"))
+    MinHashLsh.bucketPairs(keyed, maxBucketSize, 0, star = false)
+      .select(col("node_a").as("id_a"), col("node_b").as("id_b"))
       .dropDuplicates("id_a", "id_b")
+      .join(vecs.toDF("id_a", "vec_a"), "id_a")
+      .join(vecs.toDF("id_b", "vec_b"), "id_b")
       .withColumn("cosine", cosineFused(col("vec_a"), col("vec_b")))
       .where(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")

@@ -43,23 +43,15 @@ object SuffixOverlap {
   }
 
   /** Candidate pairs from shared fingerprints (canonical order, deduped,
-    * hot fingerprints capped — same skew posture as the LSH band join).
+    * hot fingerprints dropped — the LSH band join's kernel,
+    * [[MinHashLsh.bucketPairs]]). The fingerprint frame has one consumer,
+    * the kernel's single shuffle, so the rolling hash runs once per text.
     */
   def candidates(texts: Dataset[(Long, String)], cfg: GraftConfig): DataFrame = {
-    // eager per-invocation checkpoint: the fingerprint frame feeds the
-    // hot-key count and BOTH self-join sides — without truncation the
-    // Karp-Rabin rolling hash re-runs over every text 3× (guide §2.4,
-    // duplicated subtrees). Blocks are context-cleaned once the result is
-    // dropped; nothing is cached across invocations.
-    val fps = fingerprints(texts, cfg).localCheckpoint(true)
-    val hot = fps.groupBy("fp").count()
-      .where(col("count") > cfg.lsh.maxBucketSize)
-      .select("fp")
-    val pruned = fps.join(broadcast(hot), Seq("fp"), "left_anti")
-    val a = pruned.alias("a")
-    val b = pruned.alias("b")
-    a.join(b, col("a.fp") === col("b.fp") && col("a.node") < col("b.node"))
-      .select(col("a.node").as("node_a"), col("b.node").as("node_b"))
+    val keyed = fingerprints(texts, cfg)
+      .select(col("fp").as("key"), col("node"), lit(0L).as("aux"), lit(0).cast("tinyint").as("tier"))
+    MinHashLsh.bucketPairs(keyed, cfg.lsh.maxBucketSize, 0, star = false)
+      .select("node_a", "node_b")
       .dropDuplicates("node_a", "node_b")
   }
 

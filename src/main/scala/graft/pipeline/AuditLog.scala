@@ -51,15 +51,18 @@ final class AuditLog(spark: SparkSession, path: String) {
     // pair evaluated the input twice, so a nondeterministic input frame
     // could write a different number of rows than it counted and
     // desynchronize the (run_id, seq) allocation. Ordering uses UTF-8
-    // binary comparison — the same total order the previous global window
-    // produced in Spark.
+    // binary comparison with nulls first — the same total order the
+    // previous global window produced in Spark.
     val collected = audit.select(col("action"),
         to_json(struct(detailCols.map(col): _*)).as("details"))
       .collect().map(r => (r.getString(0), r.getString(1)))
-    def u8(s: String) = org.apache.spark.unsafe.types.UTF8String.fromString(s)
+    def cmp(x: String, y: String): Int =
+      if (x == null || y == null) java.lang.Boolean.compare(y == null, x == null)
+      else org.apache.spark.unsafe.types.UTF8String.fromString(x)
+        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y))
     val ordered = collected.sortWith { (a, b) =>
-      val c = u8(a._1).compareTo(u8(b._1))
-      if (c != 0) c < 0 else u8(a._2).compareTo(u8(b._2)) < 0
+      val c = cmp(a._1, b._1)
+      if (c != 0) c < 0 else cmp(a._2, b._2) < 0
     }
     val stamped = ordered.zipWithIndex.map { case ((a, d), i) => (runId, seq + i, a, d) }
     import spark.implicits._

@@ -147,9 +147,12 @@ object PagesStream {
     * ([[MinHashLsh.lshCandidates]]), emitting each within-bucket pair
     * exactly once per key without ever re-joining the corpus.
     *
-    * Scale posture mirrors the batch tier: per-key state is capped at
-    * `cfg.lsh.maxBucketSize` nodes (a hot boilerplate bucket degrades to
-    * dropping candidates, observable, never quadratic), and state expires
+    * Scale posture follows the batch tier without its look-ahead: the
+    * batch kernel sees a whole bucket and drops it once it exceeds
+    * `cfg.lsh.maxBucketSize` rows, while a stream cannot see the future, so
+    * per-key state is capped at that many nodes and later arrivals are
+    * turned away (a hot boilerplate bucket degrades to dropping
+    * candidates, observable, never quadratic), and state expires
     * via EVENT-TIME timeout one `stateTtl` past the watermark — state
     * size tracks the TTL window, not the corpus. Pairs may repeat across
     * band keys (as in the batch tier pre-dedup); downstream consumers

@@ -46,10 +46,10 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"), p.take(2000))
   }
 
-  test("hot-key pruning uses a broadcast anti-join, not a shuffle") {
-    // the bucket must actually be HOT or fusedCandidates elides the whole
-    // pruning subplan (hotArr empty) and the audit is vacuous — 40
-    // identical docs over maxBucketSize=10 forces it in
+  test("hot buckets cost one key shuffle and no anti/semi join") {
+    // 40 identical docs over maxBucketSize=10: every bucket is hot, so the
+    // plan must carry the star path, and it must do so inside the one key
+    // shuffle
     val cfg0 = graft.config.GraftConfig.default
     val cfg = cfg0.copy(lsh = cfg0.lsh.copy(maxBucketSize = 10))
     val docs = spark.range(40L)
@@ -57,8 +57,11 @@ class PlanAuditSpec extends SparkSpec {
     val sigs = graft.operators.MinHashLsh.signatures(docs, cfg)
     val cands = graft.operators.MinHashLsh.fusedCandidates(sigs, cfg)
     val p = cands.queryExecution.executedPlan.toString
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
-      "hot-key pruning must plan a broadcast LeftAnti join:\n" + p.take(3000))
+    val keyShuffles = "Exchange hashpartitioning\\(key#".r.findAllIn(p).size
+    assert(keyShuffles == 1, s"expected one shuffle by key, got $keyShuffles:\n" + p.take(3000))
+    assert(!p.contains("LeftAnti") && !p.contains("LeftSemi"),
+      "hot buckets must not plan an anti/semi join:\n" + p.take(3000))
+    assert(cands.where(col("cand_tier") === "star").count() == 39L)
   }
 
   test("extraction + signature stage stays inside whole-stage codegen") {

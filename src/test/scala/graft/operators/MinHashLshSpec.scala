@@ -57,21 +57,122 @@ class MinHashLshSpec extends SparkSpec {
     assert(math.abs(row._1 - row._2) < 0.15, s"est=${row._1} exact=${row._2}")
   }
 
-  test("hotKeyArray is exact at the cap boundary and across thin partition spread") {
-    // keys: 100 → count cap+1 (hot), 200 → count exactly cap (NOT hot),
-    // 300 → count 1. Rows are spread round-robin over many partitions so
-    // every partition-local count sits far below the cap — the pigeonhole
-    // pass-1 bound (local ≥ ceil((cap+1)/m)) must still surface key 100,
-    // and pass 2's exact recount must reject 200 despite it surviving
-    // pass 1 alongside 100.
-    val cap = 40
-    val rows = (Seq.fill(cap + 1)(100L) ++ Seq.fill(cap)(200L) ++ Seq(300L))
-    val df = spark.sparkContext.parallelize(rows, 16).toDF("key")
-    val hot = MinHashLsh.hotKeyArray(df, "key", cap)
-    assert(hot.toSet == Set(100L), s"expected exactly {100}, got ${hot.toSet}")
-    // empty result when nothing exceeds the cap — the caller elides the
-    // anti-join entirely in this case
-    assert(MinHashLsh.hotKeyArray(df, "key", cap + 1).isEmpty)
+  private type KRow = (Long, Long, Long, Byte)
+
+  /** Brute-force reference of [[MinHashLsh.bucketPairs]]: per key, a bucket
+    * of ≤ cap ROWS pairs every two rows of one tier with distinct nodes
+    * (tier 1 also within Hamming `d`); a larger bucket stars to its
+    * minimum node at tier 2, or emits nothing.
+    */
+  private def reference(rows: Seq[KRow], cap: Int, d: Int, star: Boolean): Set[(Long, Long, Byte)] =
+    rows.groupBy(_._1).values.flatMap { b =>
+      if (b.length <= cap)
+        for {
+          x <- b; y <- b
+          if x._2 < y._2 && x._4 == y._4 &&
+            (x._4 != 1 || java.lang.Long.bitCount(x._3 ^ y._3) <= d)
+        } yield (x._2, y._2, x._4)
+      else if (star) {
+        val hub = b.map(_._2).min
+        b.map(_._2).filter(_ > hub).map(n => (hub, n, 2.toByte))
+      } else Nil
+    }.toSet
+
+  private def kernel(rows: Seq[KRow], parts: Int, cap: Int, d: Int, star: Boolean) =
+    MinHashLsh.bucketPairs(spark.sparkContext.parallelize(rows, parts).toDF("key", "node", "aux", "tier"),
+      cap, d, star).as[(Long, Long, Byte)].collect()
+
+  test("bucketPairs equals a brute-force reference at cap and cap + 1 rows") {
+    val cap = 5
+    val t0 = 0.toByte
+    val t1 = 1.toByte
+    val handmade = Seq[KRow](
+      // key 1: exactly cap rows — a duplicate node, mixed tiers; the tier-1
+      // pair (12, 13) is 3 bits apart, (12, 14) only 1
+      (1, 10, 0, t0), (1, 11, 0, t0), (1, 11, 0, t0), (1, 12, 0x0, t1), (1, 13, 0x7, t1),
+      // key 2: cap + 1 rows, the minimum duplicated — hot
+      (2, 20, 0, t0), (2, 20, 0, t1), (2, 21, 0, t0), (2, 22, 5, t1), (2, 23, 0, t0), (2, 24, 0, t0),
+      // key 3: cap DISTINCT nodes but cap + 1 rows — hot by row count
+      (3, 30, 0, t0), (3, 31, 0, t0), (3, 31, 0, t0), (3, 32, 0, t0), (3, 33, 0, t0), (3, 34, 0, t0),
+      // key 4: one row; key 5: one node twice — neither pairs
+      (4, 40, 0, t0), (5, 50, 0, t0), (5, 50, 0, t0),
+      (6, 12, 0x0, t1), (6, 14, 0x1, t1), (6, 13, 0x7, t1))
+    val rnd = new scala.util.Random(7)
+    val random = Seq.fill(3000)((rnd.nextInt(300).toLong, rnd.nextInt(400).toLong,
+      rnd.nextInt(16).toLong, rnd.nextInt(2).toByte))
+    for (rows <- Seq(handmade, random); c <- Seq(cap, 10); star <- Seq(true, false)) {
+      val got = kernel(rows, 7, c, 1, star)
+      val want = reference(rows, c, 1, star)
+      assert(got.toSet == want, s"cap=$c star=$star")
+    }
+    val hand = kernel(handmade, 3, cap, 1, star = true).toSet
+    assert(hand.contains((10L, 11L, t0)) && !hand.contains((11L, 11L, t0)))
+    assert(hand.contains((12L, 14L, t1)) && !hand.exists(p => p._1 == 12L && p._2 == 13L))
+    assert(hand.filter(_._3 == 2) == Set(21L, 22L, 23L, 24L, 31L, 32L, 33L, 34L)
+      .map(n => (if (n < 30) 20L else 30L, n, 2.toByte)))
+    assert(kernel(handmade, 3, cap, 1, star = false).forall(_._3 != 2))
+  }
+
+  test("bucketPairs is exact with partitions far above the cap") {
+    // 64 input partitions over cap 16: every partition holds far fewer
+    // rows of a bucket than the cap, so only the shuffled bucket is exact
+    val cap = 16
+    val rows = (Seq.tabulate(cap + 1)(i => (100L, i.toLong, 0L, 0.toByte)) ++
+      Seq.tabulate(cap)(i => (200L, i.toLong, 0L, 0.toByte)) ++
+      Seq((300L, 1L, 0L, 0.toByte)))
+    for (star <- Seq(true, false)) {
+      val got = kernel(rows, 64, cap, 0, star)
+      assert(got.toSet == reference(rows, cap, 0, star))
+      assert(got.count(_._3 == 0) == cap * (cap - 1) / 2) // key 200 only
+      assert(got.count(_._3 == 2) == (if (star) cap else 0)) // key 100
+    }
+  }
+
+  test("a 10^5-row star bucket emits distinct nodes - 1 pairs") {
+    val n = 100000
+    val rows = spark.range(n).selectExpr("7L AS key", "(id * 7919) % 60000 AS node",
+      "0L AS aux", "CAST(0 AS TINYINT) AS tier").repartition(16)
+    val star = MinHashLsh.bucketPairs(rows, 16, 0, star = true).as[(Long, Long, Byte)].collect()
+    assert(star.length == 60000 - 1)
+    assert(star.toSet == (1L until 60000L).map(m => (0L, m, 2.toByte)).toSet)
+    assert(MinHashLsh.bucketPairs(rows, 16, 0, star = false).count() == 0L)
+  }
+
+  test("building every candidate frame submits no Spark job") {
+    val cfg = GraftConfig.default.copy(lsh = GraftConfig.default.lsh.copy(maxBucketSize = 10))
+    val text = (1 to 50).map(i => s"same$i").mkString(" ")
+    val sigs = sigsOf((1L to 40L).map(id => (id, text)), cfg)
+    val vecs = (0 until 40).map(i => (i.toLong, Array.fill(16)(0.5f))).toDF("vec_id", "embedding")
+    val texts = (1L to 40L).map(id => (id, text * 8)).toDS()
+    val builds = Seq[() => org.apache.spark.sql.DataFrame](
+      () => MinHashLsh.fusedCandidates(sigs, cfg),
+      () => MinHashLsh.lshCandidates(sigs, cfg),
+      () => MinHashLsh.simHashCandidates(sigs, cfg),
+      () => Similarity.nearDupPairs(vecs, 0.9, tables = 4, bitsPerTable = 8, maxBucketSize = 10),
+      () => SuffixOverlap.candidates(texts, cfg))
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("candidate-build", "build candidate frames", interruptOnCancel = false)
+      builds.foreach(b => b().queryExecution.executedPlan)
+      // listener events arrive in order: once the marker job is seen, every
+      // job submitted before it has been counted
+      sc.setJobGroup("candidate-marker", "marker", interruptOnCancel = false)
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains("candidate-marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains("candidate-marker"), "marker job never reached the listener")
+      assert(!groups.contains("candidate-build"), s"plan build ran jobs: $groups")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("bucketStats reports capped buckets") {

@@ -63,4 +63,14 @@ class SuffixOverlapSpec extends SparkSpec {
     val verified = SuffixOverlap.verify(cands, docs, cfg).count()
     assert(verified == 0)
   }
+
+  test("candidate plan evaluates the fingerprint sampling exactly once") {
+    // no checkpoint guards the rolling hash: its one consumer is the
+    // bucket kernel's single shuffle, so the plan must hold one instance
+    val texts = (1L to 20L).map(id => (id, s"shared text $id " * 20)).toDS()
+    val plan = SuffixOverlap.candidates(texts, GraftConfig.default)
+      .queryExecution.executedPlan.toString
+    val hits = "(?i)cdc_?fingerprints".r.findAllIn(plan).size
+    assert(hits == 1, s"expected one fingerprint evaluation, got $hits:\n" + plan.take(3000))
+  }
 }

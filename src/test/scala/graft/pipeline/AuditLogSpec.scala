@@ -57,4 +57,18 @@ class AuditLogSpec extends SparkSpec {
     assert(rows.map(_._2).sorted == Seq(0L, 1L, 2L), s"seq must continue: $rows")
     assert(rows.distinct.length == rows.length, "duplicate (run_id, seq) pair")
   }
+
+  test("a batched frame with a null action stamps seq in nulls-first order") {
+    val dir = Files.createTempDirectory("graft_audit_null").toString + "/audit"
+    val log = new AuditLog(spark, dir)
+    val audit = Seq[(String, Long)](("split", 3L), (null, 7L), ("merge", 5L), (null, 1L))
+      .toDF("action", "node")
+    log.append(audit, runId = "run-n")
+    val rows = log.history().orderBy("seq").select("seq", "action", "details")
+      .as[(Long, String, String)].collect().toSeq
+    assert(rows.map(_._1) == Seq(0L, 1L, 2L, 3L))
+    assert(rows.map(r => (r._2, r._3)) == Seq(
+      (null, """{"node":1}"""), (null, """{"node":7}"""),
+      ("merge", """{"node":5}"""), ("split", """{"node":3}""")), rows)
+  }
 }
