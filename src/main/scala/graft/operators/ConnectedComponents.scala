@@ -67,7 +67,7 @@ object ConnectedComponents {
       val head = e.take(driverFinishEdges + 1)
       if (head.length <= driverFinishEdges) {
         val out = localLabels(spark, head.map(r => (r.getLong(0), r.getLong(1))))
-        e.unpersist()
+        releaseCheckpoint(e)
         return out
       }
     }
@@ -90,7 +90,7 @@ object ConnectedComponents {
         .first()
       converged = sigRow == prevSig
       prevSig = sigRow
-      e.unpersist()
+      releaseCheckpoint(e)
       e = ss
       iter += 1
 
@@ -98,7 +98,7 @@ object ConnectedComponents {
         // contraction shrank the frontier under the cutover — finish locally
         val rows = e.as[(Long, Long)].collect()
         val out = localLabels(spark, rows)
-        e.unpersist()
+        releaseCheckpoint(e)
         return out
       }
     }
@@ -121,6 +121,16 @@ object ConnectedComponents {
       .select($"node", least($"node", $"component").as("component"))
     nodeToMin
   }
+
+  /** Free a localCheckpointed frame. `Dataset.unpersist` only drops
+    * CacheManager entries; a local checkpoint's blocks belong to the RDD
+    * behind its LogicalRDD leaf, and stay pinned until that RDD is
+    * unpersisted (or garbage-collected).
+    */
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }.foreach(_.unpersist(false))
 
   /** Local union-find over a driver-held edge array (the adaptive
     * small-graph finisher of [[run]]). Union-by-min + path compression:

@@ -22,8 +22,11 @@ import graft.operators._
   *      never recomputed from signatures (round-2 verdict: re-deriving
   *      `bandsOf(allSigs)` each fold made per-batch cost ∝ corpus in both
   *      bytes AND hash work);
-  *   3. hot-key caps come from per-key counts that are MERGED incrementally
-  *      (old counts + new batch's counts), not recounted from scratch;
+  *   3. hot-key caps come from per-key counts: the stored counts plus the
+  *      new batch's, re-aggregated over EVERY stored key each fold (no
+  *      rescan of the band index, but ∝ distinct keys: up to `lsh.bands`
+  *      per stored page)
+  *      and rewritten whole by [[saveState]];
   *   4. verify new candidate pairs only → new match edges;
   *   5. CC re-run ONLY on components touched by a new edge; untouched
   *      labels stream through unchanged.
@@ -43,16 +46,19 @@ import graft.operators._
   * re-localCheckpointed per fold — fine at test scale, the table-backed
   * form is the 10^12-doc path.
   *
-  * Honest remaining ceiling: `labels` (one 16-byte row per corpus doc) and
-  * `edges` (one per duplicate pair) are still rebuilt + re-checkpointed per
-  * fold in BOTH modes — the label merge is an upsert ("overwrite only the
-  * touched components"), which the parquet stand-in cannot express as an
-  * append. They are 2-3 orders of magnitude narrower than the frames the
-  * bucketed tables took out of the fold loop, but at the full 10^12-doc
-  * target they become the per-fold bound; the fix is the same Iceberg seam
-  * as [[Checkpoints]] (MERGE INTO labels on the touched-component key),
-  * not a new algorithm — candidate generation and verification are already
-  * ∝ batch.
+  * Honest remaining ceiling: `keyCounts` (one row per distinct band key,
+  * up to `lsh.bands` per stored page — the widest per-fold frame),
+  * `labels` (one 16-byte row per corpus doc) and `edges` (one per
+  * duplicate pair) are still rebuilt + re-checkpointed per fold in BOTH
+  * modes, and rewritten by
+  * [[saveState]] — the count merge and the label merge are upserts ("add
+  * the batch's counts", "overwrite only the touched components"), which
+  * the parquet stand-in cannot express as an append. They are narrower
+  * than the frames the bucketed tables took out of the fold loop, but at
+  * the full 10^12-doc target they become the per-fold bound; the fix is
+  * the same Iceberg seam as [[Checkpoints]] (MERGE INTO on the key /
+  * touched-component key), not a new algorithm — candidate generation and
+  * verification are already ∝ batch.
   *
   * Determinism: labels are component minima, so an incremental fold of
   * A then B yields byte-identical labels to a full run over A ∪ B —
@@ -151,14 +157,22 @@ final class IncrementalDedup(spark: SparkSession, cfg: GraftConfig = GraftConfig
     * cache instead — correct for the normal path, but a mid-append crash
     * then requires a fresh state dir.
     *
-    * Resource lifecycle: every intermediate this fold pins (rawSigs,
-    * newSigs, newBands, newEdges — Dataset persists AND the
-    * localCheckpointed novel snapshot of the no-batchId table path) is
-    * released before returning — the returned State frames are EAGER
-    * localCheckpoints (or bucketed-table scans), so nothing downstream
-    * re-reads the dropped blocks. A driver looping step() over hundreds of
-    * batches otherwise accumulates 3-4 pinned frames per fold until
-    * executor disks fill.
+    * Evaluation: each intermediate runs once per fold. Frames read by more
+    * than one consumer are pinned (Dataset persists: rawSigs, newSigs,
+    * newBands, the candidate pairs, the verify side, the touched
+    * components, the affected nodes) — Spark shares no common subplan
+    * without a cache. Frames that feed whole later queries are EAGER
+    * localCheckpoints (the novel-node set of the no-batchId table path,
+    * the verified edges, and the State's key counts, edges and labels),
+    * so those queries start at a materialized leaf instead of re-planning
+    * the tree below it.
+    *
+    * Resource lifecycle: every pin and every snapshot that is not a State
+    * frame is released before returning — the returned State frames are
+    * EAGER localCheckpoints (or bucketed-table scans), so nothing
+    * downstream re-reads the dropped blocks. A driver looping step() over
+    * hundreds of batches otherwise accumulates the pinned frames of every
+    * fold until executor disks fill.
     */
   def step(state: State, newPages: DataFrame, batchId: Option[String] = None): State = {
     val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -166,6 +180,11 @@ final class IncrementalDedup(spark: SparkSession, cfg: GraftConfig = GraftConfig
     def pin(df: DataFrame): DataFrame = {
       persisted += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df
+    }
+    def snapshot(df: DataFrame): DataFrame = {
+      val snap = df.localCheckpoint(true)
+      snapshots += snap
+      snap
     }
     // Within-batch id-identity: two crawls of one url landing in the SAME
     // batch share a node id; without this dedup both would pass the
@@ -208,9 +227,7 @@ final class IncrementalDedup(spark: SparkSession, cfg: GraftConfig = GraftConfig
         // LogicalRDD with no table reference, immune to the refresh. Its
         // blocks don't register in the CacheManager, so the sweep below
         // frees them via the LogicalRDD leaf directly.
-        val snap = novel.localCheckpoint(true)
-        snapshots += snap
-        snap
+        snapshot(novel)
       case (None, None) =>
         // in-memory state frames are stable snapshots (localCheckpoint of
         // the previous fold), so laziness is safe
@@ -229,11 +246,14 @@ final class IncrementalDedup(spark: SparkSession, cfg: GraftConfig = GraftConfig
     }
 
     // band index: compute the NEW batch's bands once, append to the stored
-    // index; per-key counts merge incrementally (old + new), no recount
+    // index. Per-key counts: old + new re-aggregated over every stored key,
+    // snapshotted ONCE — the hot-key filter and the returned State read the
+    // same materialized frame
     val newBands = pin(bandsOf(newSigs))
-    val newCounts = newBands.groupBy("key").agg(count(lit(1)).as("n"))
-    val keyCounts = state.keyCounts.unionByName(newCounts)
+    val keyCounts = state.keyCounts
+      .unionByName(newBands.groupBy("key").agg(count(lit(1)).as("n")))
       .groupBy("key").agg(sum(col("n")).as("n"))
+      .localCheckpoint(true)
     // table-backed index: append this batch's bands to the bucketed table
     // and join against THAT (pre-partitioned scan, no stored-side shuffle);
     // in-memory fallback unions onto the previous state's frame.
@@ -246,26 +266,34 @@ final class IncrementalDedup(spark: SparkSession, cfg: GraftConfig = GraftConfig
     val hot = keyCounts.where(col("n") > cfg.lsh.maxBucketSize).select("key")
 
     // candidates touching the new batch: new-side bands join the stored
-    // index (+ the batch itself) — the only band-key work ∝ batch size
-    val cands = candidateJoin(newBands, allBands, hot)
-
-    // persisted: the verify join (the dominant per-pair CPU) feeds THREE
-    // subplans — touchedComponents, affectedNodes via union, allEdges —
-    // and Spark shares no common subplans without a cache
-    val newEdges = pin(MinHashLsh.verify(cands, shingleSideOf(allSigs, cands), cfg)
+    // index (+ the batch itself) — the only band-key work ∝ batch size.
+    // Pinned, as is the shingle side: the verify join reads `cands` as its
+    // input AND through both node unions of the side's pair-node prune, and
+    // reads the side twice (a and b) — Spark shares no common subplan
+    // without a cache, so unpinned the candidate join would run 5 times.
+    val cands = pin(candidateJoin(newBands, allBands, hot))
+    // The verified edges are an EAGER batch-sized snapshot: every consumer
+    // below (touched components, the CC input, allEdges) then starts at a
+    // LogicalRDD leaf instead of carrying the whole verify tree, which AQE
+    // would re-plan after each of its stages inside every later query.
+    val newEdges = snapshot(MinHashLsh.verify(cands, pin(shingleSideOf(allSigs, cands)), cfg)
       .where(col("exact_jaccard") >= cfg.lsh.jaccardThreshold)
       .select(col("node_a").as("src"), col("node_b").as("dst")))
+    // a returned State frame, snapshotted before the CC input reads it
     val allEdges = state.edges.unionByName(newEdges).dropDuplicates("src", "dst")
+      .localCheckpoint(true)
 
-    // components touched by a new edge or containing a new node
-    val touchedComponents = state.labels
+    // components touched by a new edge or containing a new node — pinned:
+    // the CC input and the untouched-label stream both read them
+    val touchedComponents = pin(state.labels
       .join(newEdges.select(col("src").as("node"))
         .unionByName(newEdges.select(col("dst").as("node"))).distinct(),
         Seq("node"), "left_semi")
-      .select("component").distinct()
+      .select("component").distinct())
     val affectedOld = state.labels.join(touchedComponents, Seq("component"), "left_semi")
       .select("node")
-    val affectedNodes = affectedOld.unionByName(newSigs.select("node")).distinct()
+    // pinned: the CC edge filter and its vertex universe both read it
+    val affectedNodes = pin(affectedOld.unionByName(newSigs.select("node")).distinct())
 
     // subgraph CC on affected nodes only
     val affectedEdges = allEdges
@@ -273,7 +301,12 @@ final class IncrementalDedup(spark: SparkSession, cfg: GraftConfig = GraftConfig
     val relabeled = ConnectedComponents.labelsWithSingletons(affectedNodes, affectedEdges)
     val untouched = state.labels.join(touchedComponents, Seq("component"), "left_anti")
       .select("node", "component")
+    // The batch-sized touched set is broadcast, so `untouched` keeps the
+    // previous labels' partitions and the union adds relabeled's: without
+    // the coalesce (narrow, no shuffle) the label frame would gain
+    // partitions — tasks and files — on every fold.
     val labels = untouched.unionByName(relabeled.select("node", "component"))
+      .coalesce(spark.conf.get("spark.sql.shuffle.partitions").toInt)
 
     // Truncate lineage per fold: each step unions onto the previous state's
     // frames, so without a checkpoint the plan (and re-execution cost on a
@@ -288,16 +321,14 @@ final class IncrementalDedup(spark: SparkSession, cfg: GraftConfig = GraftConfig
     val next = State(
       if (checkpoints.isDefined) allSigs else allSigs.localCheckpoint(true),
       if (checkpoints.isDefined) allBands else allBands.localCheckpoint(true),
-      keyCounts.localCheckpoint(true),
-      allEdges.localCheckpoint(true),
+      keyCounts,
+      allEdges,
       labels.localCheckpoint(true))
     persisted.foreach(_.unpersist(false))
     // localCheckpoint blocks bypass the CacheManager — free them through
-    // the checkpointed RDD held by the snapshot's LogicalRDD leaf (safe:
-    // the State above is fully materialized and no longer references it)
-    snapshots.foreach(_.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(false)))
+    // the checkpointed RDD (safe: the State above is fully materialized and
+    // no longer references the snapshots)
+    snapshots.foreach(ConnectedComponents.releaseCheckpoint)
     next
   }
 

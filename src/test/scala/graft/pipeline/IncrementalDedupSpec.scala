@@ -365,12 +365,102 @@ class IncrementalDedupSpec extends SparkSpec {
     val s1 = inc.step(inc.emptyState, PagesGen.pages(spark, 60L).toDF())
     val s2 = inc.step(s1, spark.range(60L, 120L).map(id => PagesGen.pageOf(42L, id)).toDF())
     assert(s2.labels.count() == 120L)
-    // every pin (rawSigs/newSigs/newBands/newEdges) registers in the
-    // CacheManager; the returned State frames are RDD-level localCheckpoints
-    // (no CacheManager entry) — so a clean sweep leaves the manager EMPTY.
-    // Pre-fix this held 3-4 entries PER FOLD forever.
+    // every pin (rawSigs/newSigs/newBands/cands/shingle side/touched
+    // components/affected nodes) registers in the CacheManager; the returned
+    // State frames are RDD-level localCheckpoints (no CacheManager entry) —
+    // so a clean sweep leaves the manager EMPTY. Pre-fix this held 3-4
+    // entries PER FOLD forever.
     assert(spark.sharedState.cacheManager.isEmpty,
       "a fold left Dataset caches registered in the CacheManager")
+
+    // Table-backed mode adds RDD-level snapshots (the novel-node set, the
+    // verified edges) that bypass the CacheManager: the persistent-RDD
+    // registry must grow by exactly the returned State's localCheckpoints
+    // — a leaked snapshot adds an id, a freed State frame removes one.
+    val wd = java.nio.file.Files.createTempDirectory("graft_inc_release").toString
+    val tinc = new IncrementalDedup(spark, GraftConfig.default,
+      Some(new Checkpoints(spark, wd, "release-hash")), bandBuckets = 8)
+    val t1 = tinc.step(tinc.emptyState, PagesGen.pages(spark, 60L).toDF())
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val t2 = tinc.step(t1, spark.range(60L, 120L).map(id => PagesGen.pageOf(42L, id)).toDF())
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a table-backed fold left Dataset caches registered in the CacheManager")
+    val stateRdds = Seq(t2.keyCounts, t2.edges, t2.labels).flatMap(_.queryExecution.analyzed
+      .collect { case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id }).toSet
+    assert(stateRdds.size == 3, s"State should hold 3 localCheckpointed frames: $stateRdds")
+    val grown = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(grown == stateRdds,
+      s"persistent RDDs grew by $grown, the State's localCheckpoints are $stateRdds")
+    // the returned State is self-sufficient: a third fold runs on it
+    val t3 = tinc.step(t2, spark.range(120L, 180L).map(id => PagesGen.pageOf(42L, id)).toDF())
+    assert(t3.labels.count() == 180L && t3.keyCounts.agg(sum($"n")).as[Long].head() ==
+      180L * GraftConfig.default.lsh.bands)
+    // and its label frame does not gain partitions fold after fold
+    val maxParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(t3.labels.rdd.getNumPartitions <= maxParts,
+      s"labels hold ${t3.labels.rdd.getNumPartitions} partitions after 3 folds (> $maxParts)")
+  }
+
+  test("a table-backed fold scans the stored band index once") {
+    // Every query a fold runs reports its executed plan to a
+    // QueryExecutionListener; a cached frame's plan is walked once per cache
+    // builder (the queries that read the cache do not re-run it). The
+    // candidate join is the only reader of the stored band index, so a fold
+    // that evaluates each intermediate once scans the table exactly once.
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val wd = java.nio.file.Files.createTempDirectory("graft_inc_scans").toString
+    val inc = new IncrementalDedup(spark, GraftConfig.default,
+      Some(new Checkpoints(spark, wd, "scan-hash")), bandBuckets = 8)
+    val s1 = inc.step(inc.emptyState, PagesGen.pages(spark, 100L).toDF())
+    val batchB = spark.range(100L, 200L).map(id => PagesGen.pageOf(42L, id)).toDF()
+
+    // listener events arrive asynchronously and in order: keep the plans
+    // reported between a start and an end marker query
+    def marker(name: String) = spark.range(0L, 1L, 1L, 1).toDF(name)
+    val events = new java.util.concurrent.LinkedBlockingQueue[Either[String, SparkPlan]]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.analyzed.output.map(_.name) match {
+          case Seq(n) if n.startsWith("__fold_marker") => events.put(Left(n))
+          case _ => events.put(Right(qe.executedPlan))
+        }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val plans = try {
+      marker("__fold_marker_start").collect()
+      inc.step(s1, batchB)
+      marker("__fold_marker_end").collect()
+      val out = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+      var started, ended = false
+      while (!ended) {
+        events.poll(60, java.util.concurrent.TimeUnit.SECONDS) match {
+          case null => fail("the end marker query never reached the listener")
+          case Left(n) => if (n.endsWith("start")) started = true else ended = true
+          case Right(p) => if (started) out += p
+        }
+      }
+      out.toSeq
+    } finally spark.listenerManager.unregister(listener)
+
+    val builders = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
+    def bandScans(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => bandScans(a.executedPlan)
+      case q: QueryStageExec => bandScans(q.plan)
+      case m: InMemoryTableScanExec =>
+        if (builders.add(m.relation.cacheBuilder)) bandScans(m.relation.cacheBuilder.cachedPlan)
+        else 0
+      case f: FileSourceScanExec
+          if f.tableIdentifier.exists(_.table.startsWith("graft_bands_index")) => 1
+      case other => other.children.map(bandScans).sum + other.subqueries.map(bandScans).sum
+    }
+    assert(plans.nonEmpty, "the fold reported no query")
+    val scans = plans.map(bandScans).sum
+    assert(scans == 1, s"one fold scanned the stored band index $scans times")
   }
 
   test("bucketed tables are config-keyed in location: a config change never mixes rows") {
